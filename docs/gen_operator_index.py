@@ -2,19 +2,15 @@
 """Regenerate docs/OPERATORS.md from the query registry.
 
 One row per registered query: name, defining module:line, oracle
-kind, driver-window membership, and the first docstring sentence.
-Run from the repo root:  python3 docs/gen_operator_index.py
+kind, and the first docstring sentence.
+Run from the repo root:  PYTHONPATH=. python3 docs/gen_operator_index.py
 """
 
 from __future__ import annotations
 
 import inspect
 
-from oil_wells_data_wrangling_spark.plans.registry import (
-    REGISTRY,
-    _WINDOW_PRIORITY,
-    _load_all,
-)
+from oil_wells_data_wrangling_spark.plans.registry import REGISTRY, _load_all
 
 
 def first_sentence(doc: str | None) -> str:
@@ -32,16 +28,15 @@ def main() -> None:
     lines = [
         "# Operator index",
         "",
-        "GENERATED — do not edit; run `python3 docs/gen_operator_index.py`.",
+        "GENERATED — do not edit; run "
+        "`PYTHONPATH=. python3 docs/gen_operator_index.py`.",
         f"{len(REGISTRY)} registered queries; "
         f"{sum(1 for q in REGISTRY.values() if q.oracle)} with exact DuckDB "
-        "oracles; `win` marks membership in the current driver correctness "
-        "window (first 50).",
+        "oracles.",
         "",
-        "| query | impl | oracle | win | summary |",
-        "| --- | --- | --- | --- | --- |",
+        "| query | impl | oracle | summary |",
+        "| --- | --- | --- | --- |",
     ]
-    window = set(_WINDOW_PRIORITY)
     for name in sorted(REGISTRY):
         q = REGISTRY[name]
         src = inspect.getsourcefile(q.fn) or ""
@@ -52,8 +47,7 @@ def main() -> None:
             summary = summary[:217] + "..."
         lines.append(
             f"| `{name}` | {src}:{line} | "
-            f"{'exact' if q.oracle else 'rows-only'} | "
-            f"{'y' if name in window else ''} | {summary} |"
+            f"{'exact' if q.oracle else 'rows-only'} | {summary} |"
         )
     with open("docs/OPERATORS.md", "w") as f:
         f.write("\n".join(lines) + "\n")

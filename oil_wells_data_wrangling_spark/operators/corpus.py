@@ -2420,11 +2420,6 @@ def curriculum_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------- elo_ratings
-#
-# PRE-STAGED FOR ROUND 12 (not yet @register'ed) — the r11 window is
-# full; see quality_ensemble's note in textstats.py and SURVEY.md
-# "Round 12 candidates". Parity-tested by tests/test_prestaged_r12.py
-# with the driver's own Spark-vs-DuckDB comparison.
 
 _ELO_START = 1_500_000  # milli-points
 _ELO_K = 32
@@ -2656,10 +2651,6 @@ def elo_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------- chat_turns_audit
-#
-# PRE-STAGED FOR ROUND 13 (not yet @register'ed) — the 4th of r13's
-# five free slots, same pre-stage bar as the other four (impl +
-# parity test in tests/test_prestaged_r13.py + BASELINE scale row).
 
 # Deterministic multi-turn transcript synthesis shared by both
 # engines: 4 role-tagged turns drawn from the doc's own words, with

@@ -1891,11 +1891,6 @@ def log_histogram_quantile(cells: DataFrame, q_ppm: int) -> DataFrame:
 
 
 # ------------------------------------------------------------ stream_asof_join
-#
-# PRE-STAGED FOR ROUND 13 (not yet @register'ed) — ships at the r12
-# pre-stage bar (implementation + parity test in
-# tests/test_prestaged_r13.py + BASELINE scale row); registration is
-# one @register line + a window slot + a SURVEY §2 row in r13.
 
 # identical contract to the batch twin: the stream must converge to
 # batch asof_join's answer, so the same oracle checks both

@@ -234,13 +234,6 @@ def zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------- compact_table
-#
-# PRE-STAGED FOR ROUND 13 (not yet @register'ed): the r12 driver
-# window is full (3 new + the 47-name r7 cohort); r13 has <=5 free
-# slots and this ships at the same pre-stage bar r12's three met —
-# implementation + driver-style parity test (tests/test_prestaged_r13
-# .py) + BASELINE scale row land now, registration is one @register
-# line + a window slot + a SURVEY §2 row in r13.
 
 _COMPACT_FRAG_FILES = 64
 _COMPACT_BUCKETS = 8

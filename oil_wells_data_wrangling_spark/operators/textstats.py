@@ -3760,15 +3760,6 @@ def rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------ quality_ensemble
-#
-# PRE-STAGED FOR ROUND 12 (not yet @register'ed): the r11 driver
-# window is full (22 new + 28 stale rotations = all 50 slots), and the
-# rotation invariant requires never-checked operators to be in-window
-# the round they land — so this operator ships fully implemented and
-# parity-tested (tests/test_prestaged_r12.py runs the same
-# Spark-vs-DuckDB comparison the driver does) and r12 only adds the
-# @register line, a window slot, and the SURVEY §2 row. See
-# SURVEY.md "Round 12 candidates".
 
 _QE_OUT = 100
 

@@ -808,11 +808,6 @@ def warc_dedup_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------- cdx_domain_captures
-#
-# PRE-STAGED FOR ROUND 12 (not yet @register'ed) — the third of r12's
-# three free window slots, alongside quality_ensemble and elo_ratings
-# (see SURVEY "Round 12 candidates"). Parity-tested by
-# tests/test_prestaged_r12.py with the driver's own comparison.
 
 CDX_CAPTURES_ORACLE = """
 SELECT 'com,example)/d/' || CAST(doc_id AS VARCHAR) AS urlkey,

@@ -1312,9 +1312,6 @@ def stream_log_histogram_tws(
 
 
 # --------------------------------------------------------------- as-of stream
-#
-# PRE-STAGED FOR ROUND 13 (the registered demo `stream_asof_join` in
-# operators/eventops.py ships un-@register'ed; see plans/registry.py).
 
 _ASOF_OUT_SCHEMA = StructType(
     [

@@ -76,56 +76,32 @@ def test_pii_redact_single_scan_no_shuffle(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def _driver_row_history() -> tuple[int, dict[str, int]]:
-    """(latest committed round R, latest GREEN driver row per operator),
-    computed from the committed CORRECTNESS_r*.json files — the same
-    evidence the judge reads, so these invariants survive rotation."""
-    import glob
-    import json
-    import re
-
-    latest: dict[str, int] = {}
-    max_round = 0
-    for path in sorted(glob.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", path).group(1))
-        max_round = max(max_round, rnd)
-        for name, row in json.load(open(path)).items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("err") is None
-            ):
-                latest[name] = max(latest.get(name, 0), rnd)
-    return max_round, latest
-
-
 def test_driver_window_covers_required_queries():
-    """The driver's CORRECTNESS gate reads the first 50 queries()
-    yield. Rotation-proof invariants (the r9 verdict's top item —
-    the hand-pinned name set stranded twice):
+    """The driver's CORRECTNESS gate reads the first 50 names queries()
+    yields; the window is derived from the committed CORRECTNESS_r*.json
+    history. Invariants:
 
-    1. the window IS the priority list — no silent reorder;
+    1. the window is 50 distinct registered names, derived from the
+       history — no silent reorder;
     2. every registered operator with NO green driver row in any
-       committed CORRECTNESS file must be in-window (new operators
-       get their first row the round they land);
+       committed CORRECTNESS file must be in-window (new operators get
+       their first row the round they land);
     3. no operator's latest green row may age past R-5 without being
-       in-window (R = the upcoming round). The bound was R-4 through
-       r10; it is R-5 now (the r10 advice item) so that committing
-       round N's own CORRECTNESS file — which bumps R before the N+1
-       rotation exists — cannot red the suite. With 218 operators and
-       a 50-name window, a full rotation takes ~4.4 rounds, so R-5 is
-       the tightest bound a round-robin rotation can always satisfy.
+       in-window (R = the upcoming round). R-5 rather than R-4 so that
+       committing round N's own CORRECTNESS file cannot red the suite.
     """
     from oil_wells_data_wrangling_spark.plans.registry import (
-        _WINDOW_PRIORITY,
         all_queries,
+        driver_history,
+        driver_window,
     )
 
     qs = all_queries()
     window = list(qs)[:50]
-    assert window == _WINDOW_PRIORITY, "window must be the priority list"
+    max_round, latest = driver_history()
+    assert len(set(window)) == 50
+    assert window == driver_window(qs, latest), "window must be the derived one"
 
-    max_round, latest = _driver_row_history()
     upcoming = max_round + 1
     never_checked = [n for n in qs if n not in latest]
     stranded_new = sorted(set(never_checked) - set(window))
@@ -143,17 +119,54 @@ def test_driver_window_covers_required_queries():
     )
 
 
-def test_window_priority_names_all_registered():
+def test_driver_window_derivation(tmp_path, monkeypatch):
+    """The window rotates by itself: fabricated CORRECTNESS files in a
+    scratch directory drive the reader and the pure ordering."""
+    import json
+
     from oil_wells_data_wrangling_spark.plans.registry import (
-        _WINDOW_PRIORITY,
-        all_queries,
+        driver_history,
+        driver_window,
     )
 
-    qs = all_queries()
-    assert len(_WINDOW_PRIORITY) == 50
-    assert len(set(_WINDOW_PRIORITY)) == 50
-    unknown = [n for n in _WINDOW_PRIORITY if n not in qs]
-    assert not unknown, f"priority list names unregistered queries: {unknown}"
+    green = {"rows_match": True, "schema_match": True, "err": None}
+    red = {**green, "rows_match": False}
+
+    def commit(rnd: int, rows: dict) -> None:
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+
+    cohort_a = [f"q{i:03d}" for i in range(0, 50)]
+    cohort_b = [f"q{i:03d}" for i in range(50, 100)]
+    cohort_c = [f"q{i:03d}" for i in range(100, 150)]
+    commit(14, {n: green for n in cohort_a + cohort_b + cohort_c} | {"flaky": red})
+    commit(15, {n: green for n in cohort_a})
+    commit(16, {n: green for n in cohort_b}
+           | {"q100": red, "q101": {**green, "err": "boom"}})
+    # registry order deliberately not alphabetical
+    names = ["new_op", *reversed(cohort_a + cohort_b + cohort_c), "flaky"]
+
+    max_round, latest = driver_history(tmp_path)
+    assert max_round == 16
+    # red rows (rows_match false, or an error) do not count as green
+    assert latest["q100"] == latest["q101"] == 14 and "flaky" not in latest
+    # never-green names first, then the oldest cohort; ties by name
+    assert driver_window(names, latest) == ["flaky", "new_op", *cohort_c[:48]]
+
+    # committing a round re-greens the oldest cohort: the next-oldest moves in
+    commit(17, {n: green for n in cohort_c + ["flaky", "new_op"]})
+    max_round, latest = driver_history(tmp_path)
+    assert max_round == 17
+    assert driver_window(names, latest) == cohort_a
+
+    # no history (an installed package): registry order
+    (tmp_path / "empty").mkdir()
+    assert driver_history(tmp_path / "empty") == (0, {})
+    assert driver_window(names, {}) == names[:50]
+
+    # the default reads the repo root, whatever the working directory
+    repo = driver_history()
+    monkeypatch.chdir(tmp_path)
+    assert driver_history() == repo != driver_history(tmp_path)
 
 
 def test_headline_set_is_pinned():

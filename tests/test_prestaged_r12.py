@@ -1,14 +1,9 @@
-"""Round-12 pre-staged operators: quality_ensemble, elo_ratings, and
-cdx_domain_captures.
+"""Parity and property tests for quality_ensemble, elo_ratings and
+cdx_domain_captures, built before they were registered.
 
-These are fully implemented and parity-gated here with the same
-Spark-vs-DuckDB comparison the driver runs, but NOT yet @register'ed:
-the r11 driver window is full (22 new + 28 stale = 50 slots) and the
-rotation invariant requires never-checked names in-window the round
-they land. Round 12 has ≤3 free slots (SURVEY "Round 12 candidates");
-registering these costs one line + a window slot + a SURVEY §2 row
-each. When that happens they join test_oracle_parity automatically and
-this file's parity tests become redundant (keep the property tests).
+The parity tests run the same Spark-vs-DuckDB comparison the driver does;
+test_oracle_parity now covers that too. The property tests are this
+file's own.
 """
 
 from __future__ import annotations

@@ -1,14 +1,10 @@
-"""Round-13 pre-staged operators: compact_table, trace_tool_calls, and
-stream_asof_join.
+"""Parity and property tests for compact_table, trace_tool_calls,
+stream_asof_join, chat_turns_audit and specdecode_accept, built before
+they were registered.
 
-Fully implemented and parity-gated here with the same Spark-vs-DuckDB
-comparison the driver runs, but NOT yet @register'ed: the r12 driver
-window is full (3 new + the 47-name r7 cohort) and the rotation
-invariant requires never-checked names in-window the round they land.
-Round 13 has ≤5 free slots (plans/registry.py); registering these
-costs one @register line + a window slot + a SURVEY §2 row each. When
-that happens they join test_oracle_parity automatically and this
-file's parity tests become redundant (keep the property tests)."""
+The parity tests run the same Spark-vs-DuckDB comparison the driver does;
+test_oracle_parity now covers that too. The property and plan-shape tests
+are this file's own."""
 
 from __future__ import annotations
 

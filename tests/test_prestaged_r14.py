@@ -1,12 +1,10 @@
 """Round-14 pre-staged operators: dup_spans_exact and
 kv_prefix_sharing — the registry's FINAL two slots under the 250 cap
-(plans/registry.py capacity policy, decided r13).
+(the capacity note in plans/registry.py).
 
-Both were pre-staged (implemented + parity-gated here) in r13 and
-ACTIVATED in r14: @register'ed, leading _WINDOW_PRIORITY with the
-48-name r9 cohort, SURVEY §2 rows added — the registry is now FROZEN
-at the 250 capacity cap. These tests stay as the operators' standing
-parity/property suite. Novelty check done at design time:
+Both were implemented and parity-gated here before they were
+registered; these tests stay as the operators' standing parity/property
+suite. Novelty check done at design time:
 dup_spans_exact closes the named "true suffix-array substring dedup"
 gap (winnow_dup_spans is the sampled stand-in; nothing exact exists);
 kv_prefix_sharing is the first operator on the prefix-sharing/LCP

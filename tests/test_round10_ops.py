@@ -463,10 +463,11 @@ def test_pq_recall_grows_with_k(spark, sf_dir):
     """The production-K recall claim (r10 verdict item 3): recall@5
     must not degrade as the codebook widens 16 -> 256 — the measured
     table (standin 0.081, K=16 0.106, K=64 0.250, K=256 0.338 at
-    sf0.1; scripts/r11_pq_recall.py) lives in BASELINE.md. The fixed
-    signed-permutation rotation (OPQ's RR baseline) measured 0.181 at
-    K=64 vs 0.250 unrotated — rotation hurts here, so no rotation
-    operator landed (BASELINE.md round-11 OPQ decision)."""
+    sf0.1; measured by scripts/r11_pq_recall.py, now in git history)
+    lives in BASELINE.md. The fixed signed-permutation rotation (OPQ's
+    RR baseline) measured 0.181 at K=64 vs 0.250 unrotated — rotation
+    hurts here, so no rotation operator landed (BASELINE.md round-11
+    OPQ decision)."""
     from oil_wells_data_wrangling_spark.operators.similarity import (
         pq_train_codebook,
     )

@@ -51,7 +51,8 @@ def test_operator_index_in_sync():
         if m:
             rows.add(m.group(1))
     assert rows == set(REGISTRY), (
-        f"docs/OPERATORS.md drifted: run python3 docs/gen_operator_index.py "
+        "docs/OPERATORS.md drifted: run "
+        "PYTHONPATH=. python3 docs/gen_operator_index.py "
         f"(missing {sorted(set(REGISTRY) - rows)[:5]}, "
         f"stale {sorted(rows - set(REGISTRY))[:5]})"
     )
